@@ -34,8 +34,13 @@ from inf_553_datamining_mapreduce_spark.sources.readers import read_parquet_tabl
 from inf_553_datamining_mapreduce_spark.streaming import windows as W
 
 
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    return [read_parquet_table(spark, sf_dir, n) for n in names]
+def _t(
+    spark: SparkSession, sf_dir: str, *names: str, split: bool = False
+) -> list[DataFrame]:
+    """Read driver tables. ``split=True`` is for entries whose operator does
+    heavy per-row string, bytes or vector work before its first exchange
+    (see ``sources.readers._SPLIT_SMALL_SCANS``)."""
+    return [read_parquet_table(spark, sf_dir, n, split=split) for n in names]
 
 
 def golden_only() -> dict[str, str]:
@@ -564,11 +569,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return T.word_frequencies(d)
 
     def _quality_scores(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.quality_scores(d)
 
     def _language_id(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.language_id(d)
 
     def _fingerprints(spark, sf):
@@ -580,11 +585,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return T.token_stats_regex(d)
 
     def _rolling_hash_fingerprints(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.rolling_hash_fingerprints(d)
 
     def _winnow_fingerprints(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.winnow_fingerprints_df(d, k=5, window=4)
 
     def _token_rarity_stats(spark, sf):
@@ -622,11 +627,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def _minhash_lsh_near_duplicates(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return D.minhash_lsh_near_duplicates(d, n=3, min_jaccard=0.5)
 
     def _simhash_near_duplicates(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return D.simhash_near_duplicates(d, max_hamming=3)
 
     def _embedding_near_duplicates(spark, sf):
@@ -880,7 +885,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             streaming_index_near_duplicates,
         )
 
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         new = d.filter(F.col("doc_id") % 2 == 1)
         bt, pl = _minhash_index_shared(spark, sf)
         return streaming_index_near_duplicates(new, bt, pl).orderBy(
@@ -981,7 +986,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["profile_orders"] = _profile_orders
 
     def _bigram_counts(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.ngram_counts(d, n=2, min_count=5)
 
     q["bigram_counts"] = _bigram_counts
@@ -1355,7 +1360,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return O.events_hourly_heatmap(e)
 
     def _tfidf_top_terms(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.tfidf_top_terms(d, k=5)
 
     def _exact_duplicates_normalized(spark, sf):
@@ -1409,7 +1414,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return T.pmi_collocations(d)
 
     def _inverted_index_postings(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.inverted_index(d)
 
     def _training_batches(spark, sf):
@@ -1492,7 +1497,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["communities_louvain_multilevel"] = _communities_louvain_multilevel
 
     def _duplicated_span_stats(spark, sf):
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.duplicated_span_stats(d, k=8)
 
     q["duplicated_span_stats"] = _duplicated_span_stats
@@ -1504,7 +1509,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # pure projection and the probe one stream-static-joinable
         # equi-join — the same composition runs under Structured
         # Streaming with zero state.
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         idx = T.build_span_index(d.filter(F.col("doc_id") % 2 == 0), k=8)
         return T.index_span_contamination(
             d.filter(F.col("doc_id") % 2 == 1), idx, k=8
@@ -1517,7 +1522,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # measures span duplication; this emits the DEDUPLICATED corpus —
         # one canonical occurrence (min doc_id, pos) per over-threshold
         # span hash survives, every other occurrence's tokens drop.
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.remove_duplicated_spans(d, k=8)
 
     q["span_deduped_corpus"] = _span_deduped_corpus
@@ -1560,7 +1565,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _media_phash_near_duplicates(spark, sf):
         from inf_553_datamining_mapreduce_spark.operators import multimodal as MM
 
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return MM.media_phash_near_duplicates(_ppm_assets(d), max_hamming=8)
 
     q["media_phash_near_duplicates"] = _media_phash_near_duplicates
@@ -1598,7 +1603,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _audio_fp_near_duplicates(spark, sf):
         from inf_553_datamining_mapreduce_spark.operators import multimodal as MM
 
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return MM.audio_near_duplicates(_wav_assets(d), max_hamming=8)
 
     q["audio_fp_near_duplicates"] = _audio_fp_near_duplicates
@@ -1627,7 +1632,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Ingestion-time image dedup on the same even/odd split as the
         # other incremental probes: even assets are the persisted pHash
         # index, odd the incoming batch — stream-static joins only.
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         band_tbl, index_sig = MM.build_phash_index(
             _ppm_assets(d.filter(F.col("doc_id") % 2 == 0))
         )
@@ -1644,7 +1649,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Ingestion-time ExactSubstr REMOVAL (the scrub twin of
         # incremental_span_contamination): spans already in the indexed
         # corpus are cut out of incoming documents before they land.
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         idx = T.build_span_index(d.filter(F.col("doc_id") % 2 == 0), k=8)
         return T.scrub_indexed_spans(
             d.filter(F.col("doc_id") % 2 == 1), idx, k=8
@@ -1792,7 +1797,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # surfacing); this rule gives k=129 there. Both engines derive
         # the identical k (DuckDB via exact-corrected SQRT), so the
         # chained-CTE oracle extends unchanged.
-        (emb,) = _t(spark, sf, "embeddings")
+        (emb,) = _t(spark, sf, "embeddings", split=True)
         return SIM.semantic_dedup_keep_best_scaled(emb, iters=3, tau_num=45)
 
     q["semantic_dedup_keep_best_scaled"] = _semantic_dedup_keep_best_scaled
@@ -2223,7 +2228,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # coarse-quantizer training loop under the oracle gate (the
         # library KMeans inside topk_cosine_ivf is seeded-float and can
         # only be property-tested).
-        (emb,) = _t(spark, sf, "embeddings")
+        (emb,) = _t(spark, sf, "embeddings", split=True)
         return SIM.kmeans_fixedpoint(emb, k=8, iters=3)
 
     q["kmeans_centroids_fixedpoint"] = _kmeans_centroids_fixedpoint
@@ -2233,7 +2238,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # approximate pipeline (not a brute-force stand-in), n_probe can
         # sit at the honest 2/8 scan fraction instead of the recall-1.0
         # setting topk_cosine_ivf needs.
-        (emb,) = _t(spark, sf, "embeddings")
+        (emb,) = _t(spark, sf, "embeddings", split=True)
         return SIM.ivf_topk_fixedpoint(
             emb, _ann_queries(spark, sf), k=5, n_clusters=8, iters=3,
             n_probe=2,
@@ -2369,7 +2374,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # and score against it — stream-static semantics, state never
         # grows with the stream (the incremental_semantic_dedup
         # convention applied to the compressed-domain index).
-        (emb,) = _t(spark, sf, "embeddings")
+        (emb,) = _t(spark, sf, "embeddings", split=True)
         indexed = emb.filter(F.col("vec_id") % 2 == 0)
         incoming = emb.filter(
             (F.col("vec_id") % 2 == 1) & (F.col("vec_id") < 20)
@@ -2429,7 +2434,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _hashed_doc_features(spark, sf):
         # Feature hashing (Weinberger et al. 2009): vocabulary-free
         # signed projection, engine-exact md5 arithmetic.
-        (d,) = _t(spark, sf, "documents")
+        (d,) = _t(spark, sf, "documents", split=True)
         return T.hashed_doc_features(d, dims=64)
 
     q["hashed_doc_features"] = _hashed_doc_features

@@ -13,6 +13,7 @@ Reference equivalents (SURVEY.md §2.1):
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,19 +22,24 @@ from pyspark.sql.types import StructType
 from inf_553_datamining_mapreduce_spark.schemas import TESTDATA_SCHEMAS
 
 
-# Fact/corpus tables whose downstream operators do the heavy PER-ROW work
-# (split/md5 span hashing, shingling, regex scrubbing, payload synthesis +
-# decode, vector arithmetic), keyed by the column to hash-distribute on.
+# The small-scan split, OPT-IN per caller (``read_parquet_table(...,
+# split=True)``), keyed by the column each table hash-distributes on.
 # The driver's testdata writes each table as ONE parquet file with ONE row
 # group, so the scan is a single task no matter what
 # ``spark.sql.files.maxPartitionBytes`` / ``minPartitionNum`` say (a row
-# group goes to the split holding its midpoint) — and every pre-exchange
-# projection then runs on ONE core. Measured at sf0.1 (32-core harness):
-# duplicated_span_stats 5.2 s single-task vs 1.6 s after a 32-way split,
-# remove_duplicated_spans 6.4 -> 2.5, minhash_lsh 5.0 -> 2.7, and the
-# 8-vs-32-core bench ratios sat at ~1.0 for exactly this reason (r13
-# verdict item 3). Dimension tables (region/nation/customer/supplier/part)
-# are deliberately NOT listed: they are broadcast-join sides, where a
+# group goes to the split holding its midpoint), and every pre-exchange
+# projection runs on ONE core. A consumer that does heavy PER-ROW string,
+# bytes or vector work before its first exchange (span hashing,
+# shingling, regex scrubbing, payload synthesis + decode, vector
+# distances) wins by spreading that work; the registry opts in the
+# entries that read >= 1.2x faster split in both rounds of an interleaved
+# sf0.1 A/B on 4 cores (bigram_counts 2.2x, minhash_lsh 1.95x,
+# span_deduped_corpus 1.9x). Every other consumer pays the exchange for
+# little or nothing (relational / OLAP / sketch / window plans; cheap
+# corpus passes such as exact_duplicates, 0.64x split) or needs the
+# unsplit layout: the pyspark.ml KMeans behind ivf_top_k gets a stable
+# 1-partition input across core counts only from the plain scan.
+# Dimension tables are never split: they are broadcast-join sides, where a
 # pre-broadcast shuffle is pure overhead.
 _SPLIT_SMALL_SCANS = {
     "lineitem": "l_orderkey",
@@ -46,12 +52,45 @@ _SPLIT_SMALL_SCANS = {
 # "Single-split-sized": well under any sensible
 # ``spark.sql.files.maxPartitionBytes`` (default 128 MB), so the scan is
 # provably one task and the redistribution is cheap by construction. At
-# scale these tables exceed this bound and the repartition never fires —
-# the plan is IDENTICAL to before on real deployments.
+# scale these tables exceed this bound and the repartition never fires,
+# so the plan is the plain scan on real deployments.
 _SPLIT_SMALL_MAX_BYTES = 32 * 1024 * 1024
 
+# Inferred parquet schemas of regular files: path -> (stamp, StructType),
+# where stamp is (st_mtime_ns, st_size, nanosAsLong). Inference is a Spark
+# job per read (~0.14 s warm on sf0.01 lineitem); a read with the known
+# schema launches none and plans identically. A rewrite of the file changes
+# the stamp and is re-inferred; one entry per path bounds the memo.
+_SCHEMA_MEMO: dict[str, tuple[tuple, StructType]] = {}
 
-def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+
+def _scan(spark: SparkSession, path: str) -> tuple[DataFrame, int | None]:
+    """``spark.read.parquet(path)``, with the schema memoized when ``path``
+    is a local regular file. Also returns that file's size (None for a
+    directory table, a missing path or a non-local URI, which are read
+    and inferred as given)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path), None
+    stamp = (
+        st.st_mtime_ns,
+        st.st_size,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"),
+    )
+    hit = _SCHEMA_MEMO.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path), st.st_size
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[path] = (stamp, df.schema)
+    return df, st.st_size
+
+
+def read_parquet_table(
+    spark: SparkSession, sf_dir: str, name: str, split: bool = False
+) -> DataFrame:
     """Scan one driver-generated parquet table (TESTDATA.md).
 
     ``events.ts`` is stored as TIMESTAMP(NANOS), which Spark reads only as a
@@ -60,6 +99,17 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     ns→µs step uses integral ``div`` (exact on long), NOT a double divide:
     epoch nanos ≈ 1.7e18 exceed double's 2^53 exact range, so floor(x/1000.0)
     can land one µs low near a boundary. Stays in whole-stage codegen.
+
+    The inferred schema of a single-file table is memoized per path, keyed
+    on the file's ``st_mtime_ns`` and ``st_size`` and the session's
+    ``nanosAsLong``; a repeat read passes it to ``spark.read.schema`` and
+    skips the inference job. Directory tables are inferred on every read.
+
+    ``split=True`` hash-repartitions a single-split-sized fact/corpus file
+    (``_SPLIT_SMALL_SCANS``) to ``defaultParallelism`` on its key, for
+    consumers doing heavy per-row work before their first exchange. It
+    never fires on directory tables or files above
+    ``_SPLIT_SMALL_MAX_BYTES``.
     """
     if name == "events":
         # Runtime SQL confs so this works under ANY session (the correctness
@@ -70,7 +120,7 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
         # of the host timezone.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    df, size = _scan(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -82,25 +132,16 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
             # micros), so batch results are unchanged.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     key = _SPLIT_SMALL_SCANS.get(name)
-    if key is not None:
-        path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-        try:
-            small = os.path.getsize(path) <= _SPLIT_SMALL_MAX_BYTES
-        except OSError:
-            # Non-local storage (object store / directory table): at that
-            # point the table is real-deployment-sized and the scan is
-            # already parallel; skip.
-            small = False
-        n = spark.sparkContext.defaultParallelism
-        if small and n > 1:
-            # HASH repartition on the table key, not round-robin: row
-            # placement is deterministic under task retry (guide §2.5 /
-            # SPARK-38388) and it skips round-robin's
-            # sort-before-repartition pass. Results are unchanged — only
-            # row placement moves, and every declared query's output is
-            # order-pinned (verified bit-exact against the full DuckDB
-            # oracle registry after this change).
-            df = df.repartition(n, F.col(key))
+    if not split or key is None or size is None or size > _SPLIT_SMALL_MAX_BYTES:
+        return df
+    n = spark.sparkContext.defaultParallelism
+    if n > 1:
+        # HASH repartition on the table key, not round-robin: row
+        # placement is deterministic under task retry (guide §2.5 /
+        # SPARK-38388) and it skips round-robin's sort-before-repartition
+        # pass. Results are unchanged: only row placement moves, and every
+        # declared query's output is order-pinned.
+        df = df.repartition(n, F.col(key))
     return df
 
 

@@ -106,3 +106,28 @@ def test_bench_unknown_subset_name_fails_loudly():
     )
     assert proc.returncode != 0
     assert "unknown queries" in (proc.stderr + proc.stdout)
+
+
+def test_bench_warmup_falls_back_to_first_subset_query():
+    # A subset without group_avg_nation_region warms up with its own first
+    # query. Every other warm-up step fails on the stub session and is
+    # skipped, as _warmup skips any failing step.
+    import bench
+
+    calls = []
+
+    class _Plan:
+        def count(self):
+            calls.append("count")
+            return 0
+
+    def _query(spark, sf_dir):
+        calls.append(sf_dir)
+        return _Plan()
+
+    class _NoSpark:
+        def __getattr__(self, name):
+            raise RuntimeError(name)
+
+    bench._warmup(_NoSpark(), {"word_frequencies": _query}, "sf")
+    assert calls == ["sf", "count"]

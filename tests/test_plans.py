@@ -16,17 +16,23 @@ def _plan(df) -> str:
 
 
 def _shuffle_exchanges(plan: str) -> int:
-    """Hashpartitioning exchanges EXCLUDING the reader's deliberate
-    small-scan distribution (REPARTITION_BY_NUM — the r14
-    single-row-group split in read_parquet_table, a no-op on
-    real-deployment-sized inputs). The counts below audit the
-    aggregation/join shuffles the operators themselves introduce."""
+    """Hashpartitioning exchanges. Default reads are plain scans, so the
+    counts below audit every aggregation/join shuffle the operators
+    introduce, and any repartition one adds."""
     return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange hashpartitioning" in line
-        and "REPARTITION_BY_NUM" not in line
+        1 for line in plan.splitlines() if "Exchange hashpartitioning" in line
     )
+
+
+def test_reader_split_is_opt_in(spark, sf_dir):
+    # The reader's small-scan split is opt-in: a default read is the plain
+    # scan, and split=True adds exactly one hash exchange on the table key.
+    plain = _plan(read_parquet_table(spark, sf_dir, "lineitem"))
+    assert "REPARTITION_BY_NUM" not in plain, plain
+    split = _plan(read_parquet_table(spark, sf_dir, "lineitem", split=True))
+    exchanges = [ln for ln in split.splitlines() if "REPARTITION_BY_NUM" in ln]
+    assert len(exchanges) == 1, split
+    assert "hashpartitioning(l_orderkey#" in exchanges[0], split
 
 
 def test_contamination_broadcasts_eval_side(spark, sf_dir):
@@ -51,15 +57,10 @@ def test_winnow_plan_has_no_aggregation_shuffle(spark, sf_dir):
     d = read_parquet_table(spark, sf_dir, "documents")
     plan = _plan(winnow_fingerprints_df(d))
     # Winnowing is per-document narrow work: hash, window-min, explode. The
-    # only exchanges allowed are the final presentation sort's range
-    # partitioning and the reader's deliberate small-scan distribution
-    # (REPARTITION_BY_NUM — the r14 single-row-group split in
-    # read_parquet_table, which never fires on real-deployment-sized
-    # inputs). Any ENSURE_REQUIREMENTS hashpartitioning exchange means an
-    # aggregation/join shuffle crept into the per-document pipeline.
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "REPARTITION_BY_NUM" in line, plan
+    # only exchange allowed is the final presentation sort's range
+    # partitioning. Any hashpartitioning exchange means an aggregation/join
+    # shuffle (or a repartition) crept into the per-document pipeline.
+    assert _shuffle_exchanges(plan) == 0, plan
 
 
 def test_pricing_summary_pushes_filter_to_scan(spark, sf_dir):
